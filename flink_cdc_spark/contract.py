@@ -1169,7 +1169,7 @@ def schema_evolution_behaviors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag so any branch diverging fails the single hash gate."""
     from pyspark.sql import functions as F
 
-    from .streaming.windowed import scoped_shuffle_partitions
+    from .streaming.epoch import scoped_shuffle_partitions
 
     # the composers materialize customer-sized event streams eagerly —
     # scope their shuffles to the table size, not the session width
@@ -1699,7 +1699,7 @@ def streaming_retract_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         env = ParquetTableSource(spark, sf_dir).changelog(
             "orders", "default.orders", _ORDERS_MUT
         )
-        ra.stage(env, "o_orderkey")
+        ra.stage(env)
     ra.run()
     return ra.current_state()
 

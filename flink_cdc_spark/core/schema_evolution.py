@@ -215,16 +215,6 @@ def get_least_common_type(current: DataType, target: DataType) -> DataType:
     return merged.null() if nullable else merged.not_null()
 
 
-def is_data_type_compatible(current: Optional[DataType], upcoming: DataType) -> bool:
-    """Whether upcoming values fit the current column without change
-    (SchemaMergingUtils.isDataTypeCompatible :330-348)."""
-    if current is not None and current.not_null() == upcoming.not_null():
-        return True
-    if current is None:
-        return False
-    return current.not_null() in _TYPE_MERGING_TREE[upcoming.root]
-
-
 def get_least_common_schema(current: Optional[Schema], upcoming: Schema) -> Schema:
     """Widen `current` so rows of `upcoming` fit
     (SchemaMergingUtils.getLeastCommonSchema :130-199). Column order of

@@ -726,27 +726,21 @@ def streaming_stateful_dedup(spark, sf_dir):
     from ..streaming.windowed import rotate_emit_dir
 
     emit = rotate_emit_dir(f"{staged}_emit")
-    from ..streaming.windowed import scoped_shuffle_partitions
+    from ..streaming.epoch import run_available_now
 
-    with scoped_shuffle_partitions(spark, 8):
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .json(os.path.join(staged, "b*"))
-        )
-        deduped = streaming_exact_dedup(stream)
-        q = (
-            deduped.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, _id: bdf.write.mode("append").parquet(emit))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    from ..streaming.windowed import unload_state_store_providers
-
-    unload_state_store_providers(spark)
+    stream = (
+        spark.readStream.schema("doc_id BIGINT, text STRING")
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .json(os.path.join(staged, "b*"))
+    )
+    run_available_now(
+        spark,
+        streaming_exact_dedup(stream),
+        os.path.join(work, "ckpt"),
+        lambda bdf, _id: bdf.write.mode("append").parquet(emit),
+        partitions=8,
+    )
     shutil.rmtree(work, ignore_errors=True)  # checkpoint state only
     return spark.read.schema("doc_id LONG, fingerprint STRING").parquet(emit)
 

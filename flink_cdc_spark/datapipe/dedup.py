@@ -55,15 +55,6 @@ COSINE_DUP_THRESHOLD = 0.4
 _NORM = "lower(trim(regexp_replace({col}, '\\\\s+', ' ')))"
 
 
-def _shingle_expr(text_col: str, n: int = SHINGLE_N) -> str:
-    """Spark SQL: distinct word n-grams of `text_col` as array<string>."""
-    toks = f"split(lower(trim({text_col})), '\\\\s+')"
-    return (
-        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
-        f"i -> concat_ws(' ', slice({toks}, i, {n}))))"
-    )
-
-
 def _shingle_sql_duckdb(text_col: str, n: int = SHINGLE_N) -> str:
     toks = f"string_split_regex(lower(trim({text_col})), '\\s+')"
     return (
@@ -249,16 +240,6 @@ def ngram_jaccard_oracle_sql(
 # --------------------------------------------------------------------------
 # MinHash + LSH (banded candidate generation, exact verification)
 # --------------------------------------------------------------------------
-
-
-def minhash_signatures(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
-    """K md5-derived minhashes per doc (one aggregate shuffle)."""
-    ex = _exploded_shingles(df, key, text)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
-        for i in range(MINHASH_K)
-    ]
-    return ex.groupBy(key).agg(F.first("n_sh").alias("n_sh"), *aggs)
 
 
 def minhash_lsh_pairs(
@@ -506,7 +487,7 @@ def connected_components(
 
     spark = edges.sparkSession
     if shuffle_partitions:
-        from ..streaming.windowed import scoped_shuffle_partitions
+        from ..streaming.epoch import scoped_shuffle_partitions
 
         scope = scoped_shuffle_partitions(spark, shuffle_partitions)
     else:
@@ -605,10 +586,6 @@ def _dot_expr(a: str, b: str) -> str:
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS double) * cast(y AS double)), "
         f"cast(0 AS double), (acc, v) -> acc + v)"
     )
-
-
-def _norm_expr(col: str) -> str:
-    return f"sqrt({_dot_expr(col, col)})"
 
 
 def embedding_near_dup_pairs(

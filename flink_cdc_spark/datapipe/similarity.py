@@ -366,18 +366,6 @@ def ann_topk_oracle_sql(
 # --------------------------------------------------------------------------
 
 
-def _quant_expr(unit: str) -> str:
-    """Unit vector -> int8 codes: q_i = round(u_i * 127 / max|u|). The
-    per-vector scale keeps full dynamic range; codes fit a byte — the
-    4x memory/bandwidth cut that makes billion-vector scans tractable."""
-    scale = f"(127.0 / aggregate({unit}, cast(0 AS double), (m, x) -> greatest(m, abs(x))))"
-    return f"transform({unit}, x -> cast(round(x * {scale}) AS int))"
-
-
-def _inv_scale_expr(unit: str) -> str:
-    return f"(aggregate({unit}, cast(0 AS double), (m, x) -> greatest(m, abs(x))) / 127.0)"
-
-
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,

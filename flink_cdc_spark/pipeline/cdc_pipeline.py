@@ -389,7 +389,7 @@ class MultiTableCdcPipeline:
     def _scope(self):
         import contextlib
 
-        from ..streaming.windowed import scoped_shuffle_partitions
+        from ..streaming.epoch import scoped_shuffle_partitions
 
         if self.shuffle_partitions:
             return scoped_shuffle_partitions(self.spark, self.shuffle_partitions)

@@ -25,11 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .windowed import (
-    STATE_PARTITIONS,
-    scoped_shuffle_partitions,
-    unload_state_store_providers,
-)
+from .epoch import run_available_now
 
 STREAM_SCHEMA = "event_id LONG, ts_us LONG, user_id LONG, event_type STRING, value DOUBLE"
 
@@ -62,19 +58,12 @@ def stream_static_enrich(
     ).select("event_id", "user_id", "event_type", "segment")
     out_schema = enriched.schema
 
-    def write_emission(batch_df, epoch_id):
-        batch_df.write.mode("append").parquet(emit_dir)
-
-    with scoped_shuffle_partitions(spark, STATE_PARTITIONS):
-        q = (
-            enriched.writeStream.outputMode("append")
-            .foreachBatch(write_emission)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    unload_state_store_providers(spark)
+    run_available_now(
+        spark,
+        enriched,
+        ckpt,
+        lambda batch_df, _: batch_df.write.mode("append").parquet(emit_dir),
+    )
     try:
         return spark.read.schema(out_schema).parquet(emit_dir)
     except Exception:

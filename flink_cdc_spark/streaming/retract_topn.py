@@ -44,18 +44,24 @@ exact integer cents.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE, OP_INSERT, OP_UPDATE
-from .retract_agg import stage_replay_batches, staged_schema
+from ..sources.envelope import ENVELOPE_OP, ENVELOPE_SEQ, OP_DELETE
+from .epoch import EpochStateMachine
 
 
-class RetractTopNStream:
+class RetractTopNStream(EpochStateMachine):
     """Maintains ``SELECT *, row_number() OVER (PARTITION BY group
-    ORDER BY value DESC, key ASC) <= n`` over a replayed changelog."""
+    ORDER BY value DESC, key ASC) <= n`` over a replayed changelog.
+
+    The carry is the resolved image plane (r16, VERDICT r15 item 3): the
+    fold computes exactly the post-commit image state as `tbl_new` every
+    epoch, so re-resolving it from disk next epoch (multi-commit
+    merge-on-read scan + pk-window exchange) was pure waste."""
+
+    _TABLE = "both"
 
     def __init__(
         self,
@@ -68,71 +74,14 @@ class RetractTopNStream:
         staged_dir: Optional[str] = None,
         compact_every: int = 8,
     ):
-        self.spark = spark
+        super().__init__(spark, work_dir, staged_dir, compact_every)
         self.key = key
         self.group = group
         self.value = value
         self.n = n
-        self.active = staged_dir or os.path.join(work_dir, "active")
-        self.ckpt = os.path.join(work_dir, "ckpt")
-        self.state_dir = os.path.join(work_dir, "state")
-        os.makedirs(self.active, exist_ok=True)
-        os.makedirs(self.state_dir, exist_ok=True)
-        from ..sinks.lsm_store import LsmStateStore
-
-        self.state = LsmStateStore(
-            spark, self.state_dir, compact_every=compact_every
-        )
-        self._schema = None
-        # resolved image plane carried across epochs WITHIN a run (r16,
-        # VERDICT r15 item 3): the fold computes exactly the post-commit
-        # image state as `tbl_new` every epoch, so re-resolving it from
-        # disk next epoch (multi-commit merge-on-read scan + pk-window
-        # exchange) was pure waste — the round's one perf-weak mark.
-        # Carried as a localCheckpoint (lineage truncated, so plans don't
-        # chain across epochs). Replay-safe: a crash drops the process
-        # and the next attempt re-reads the store; within a run, the
-        # carry is only trusted for epochs STRICTLY AFTER the one that
-        # produced it (_carry_epoch guard).
-        self._tbl_carry = None
-        self._carry_epoch = None
-
-    # -- staging (retract_agg pattern: inserts, updates, deletes) -----------
-
-    def stage(self, env: DataFrame) -> None:
-        env = env.withColumn(
-            "__b",
-            F.when(F.col(ENVELOPE_OP) == OP_INSERT, F.lit(0))
-            .when(F.col(ENVELOPE_OP) == OP_UPDATE, F.lit(1))
-            .otherwise(F.lit(2)),
-        )
-        self._schema = env.drop("__b").schema
-        stage_replay_batches(env, self.active)
-
-    def staged(self) -> bool:
-        return os.path.exists(os.path.join(self.active, "_STAGED"))
-
-    # -- LSM-backed state (one O(delta) union-tagged commit per epoch) -------
-
-    _BOTH = "both"
-    _PKS = ["__t", "__k1", "__k2"]
-    # lineage-truncation cadence for the carried image plane (see
-    # incremental_join): in-between epochs carry the cached frame
-    # directly — zero extra jobs — and every _CKPT_EVERY-th epoch
-    # re-anchors in a localCheckpoint to bound plan growth
-    _CKPT_EVERY = 4
-
-    def _versions(self):
-        """Epochs with a live delta commit in the LSM manifest
-        (compaction folds older epochs' deltas into the base; the tests
-        and the registry row run 3 epochs against compact_every=8)."""
-        m = self.state._load(self._BOTH)
-        if m is None:
-            return []
-        return sorted({d["epoch"] for d in m["deltas"] if "epoch" in d})
 
     def _read_plane(self, plane: str) -> Optional[DataFrame]:
-        state = self.state.read(self._BOTH, predicate=f"__t = '{plane}'")
+        state = self.state.read(self._TABLE, predicate=f"__t = '{plane}'")
         if state is None:
             return None
         if plane == "tbl":
@@ -141,15 +90,8 @@ class RetractTopNStream:
 
     # -- the maintenance epoch ------------------------------------------------
 
-    def _merge_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from ..sources.envelope import wrap_as_upsert_deletes
-
+    def _fold(self, batch_df: DataFrame, epoch_id: int) -> None:
         k, g, v = self.key, self.group, self.value
-        # replay-overwrite: drop any delta a crashed attempt of this
-        # epoch left behind, so the recompute reads the state exactly as
-        # of the committed predecessor
-        self.state.begin_epoch(epoch_id)
-        self.state.drop_epoch_deltas(self._BOTH, epoch_id)
         pk = F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}"))
         w = Window.partitionBy("__pk").orderBy(F.col(ENVELOPE_SEQ).desc())
         delta = (
@@ -180,16 +122,9 @@ class RetractTopNStream:
             )
             .unionByName(batch_df.select(F.col(f"after.{g}").alias("__g")))
         )
-        if self._carry_epoch is not None and self._carry_epoch >= epoch_id:
-            # replayed/retried epoch in-process: the carry reflects a
-            # commit this epoch is about to overwrite — fall back to the
-            # store (drop_epoch_deltas above restored the predecessor)
-            self._tbl_carry.unpersist()
-            self._tbl_carry = None
-            self._carry_epoch = None
         fresh_read = None
-        if self._tbl_carry is not None:
-            tbl_old = self._tbl_carry  # materialized last epoch
+        if self._carry is not None:
+            tbl_old = self._carry  # materialized last epoch
         else:
             tbl_old = self._read_plane("tbl")
             if tbl_old is not None:
@@ -298,31 +233,12 @@ class RetractTopNStream:
                 F.col("rnk"),
                 F.col("__rrnk").isNull().alias("__dead"),
             )
-            combined = tbl_plane.unionByName(view_plane)
-            # ONE pk-unique delta commit carries both planes — a single
-            # all-or-nothing write job per epoch, hive-partitioned on the
-            # plane tag so per-plane reads prune at file listing
-            self.state.merge(
-                self._BOTH,
-                wrap_as_upsert_deletes(combined, self._BOTH, "__dead"),
-                combined.drop("__dead").schema,
-                self._PKS,
-                partition_keys=["__t"],
-                batch_unique=True,
-            )
+            self._commit_planes(tbl_plane.unionByName(view_plane))
             # commit landed: the post-commit image plane IS the next
             # epoch's state (exactly what a post-commit merge-on-read
-            # would resolve); cache filled during the merge job, periodic
-            # checkpoint bounds plan growth
-            prev_carry = self._tbl_carry
-            if epoch_id % self._CKPT_EVERY == self._CKPT_EVERY - 1:
-                self._tbl_carry = tbl_new.localCheckpoint(eager=True)
-            else:
-                self._tbl_carry = tbl_new
-                tbl_new = None  # adopted — must not unpersist in finally
-            self._carry_epoch = epoch_id
-            if prev_carry is not None:
-                prev_carry.unpersist()
+            # would resolve); its cache filled during the merge job
+            self._adopt_carry(tbl_new, epoch_id)
+            tbl_new = None
         finally:
             delta.unpersist()
             if tbl_new is not None:
@@ -331,46 +247,6 @@ class RetractTopNStream:
                 tbl_new.unpersist()
             if fresh_read is not None:
                 fresh_read.unpersist()
-
-    # -- the streaming query ---------------------------------------------------
-
-    def run(self) -> None:
-        if self._schema is None:  # attached to a pre-staged directory
-            self._schema = staged_schema(self.spark, self.active)
-        from .windowed import STATE_PARTITIONS, scoped_shuffle_partitions
-
-        stream = (
-            self.spark.readStream.schema(self._schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.active)
-        )
-        try:
-            with scoped_shuffle_partitions(self.spark, STATE_PARTITIONS):
-                q = (
-                    stream.writeStream.outputMode("update")
-                    .foreachBatch(lambda df, eid: self._merge_epoch(df, eid))
-                    .option("checkpointLocation", self.ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
-            # checkpoint committed: clear the persisted in-flight marker.
-            # Deliberately NOT in the finally: a failed run's last epoch
-            # can still replay, and sealing would let a maintenance
-            # compact() bake its delta into the base.
-            self.state.seal(self._BOTH)
-        finally:
-            # released even when the streaming query fails (ADVICE r16 —
-            # the crash-injection subclasses exercise that path): the
-            # carried image plane's cached blocks and the state-store
-            # providers must not outlive the run
-            if self._tbl_carry is not None:
-                self._tbl_carry.unpersist()
-                self._tbl_carry = None
-                self._carry_epoch = None
-            from .windowed import unload_state_store_providers
-
-            unload_state_store_providers(self.spark)
 
     def current_topn(self) -> DataFrame:
         view = self._read_plane("topn")

@@ -42,6 +42,7 @@ from ..sources.envelope import (
     ENVELOPE_TABLE_ID,
     OP_DELETE,
 )
+from .epoch import run_available_now
 from .wire import KIND_DATA, KIND_DDL, WIRE_SCHEMA, ddl_from_dict
 
 
@@ -209,36 +210,22 @@ class StreamingPipelineRunner:
                 return rule
         return None
 
-    def start(self, source_dir: str, available_now: bool = True):
-        """Start the stream over a directory of wire JSON files."""
-        wire = self.spark.readStream.schema(WIRE_SCHEMA).json(source_dir)
-        writer = (
-            wire.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
     def run_available(self, source_dir: str, timeout: int = 300) -> None:
-        import contextlib
-
-        from .windowed import scoped_shuffle_partitions, unload_state_store_providers
-
-        scope = (
-            scoped_shuffle_partitions(self.spark, self.shuffle_partitions)
-            if self.shuffle_partitions
-            else contextlib.nullcontext()
+        """Drain the wire JSON files under ``source_dir`` through
+        process_batch, then seal the state once the checkpoint has
+        committed."""
+        wire = self.spark.readStream.schema(WIRE_SCHEMA).json(source_dir)
+        run_available_now(
+            self.spark,
+            wire,
+            self.checkpoint_dir,
+            self.process_batch,
+            partitions=self.shuffle_partitions,
+            timeout=timeout,
         )
-        # the streaming query CLONES the session at start(), snapshotting
-        # the scoped width — so the scope need only bracket start()
-        with scope:
-            q = self.start(source_dir, available_now=True)
-            q.awaitTermination(timeout)
         if hasattr(self.state, "seal_all"):
             # checkpoint committed: clear the persisted in-flight markers
             self.state.seal_all()
-        unload_state_store_providers(self.spark)
 
     # -- the core ----------------------------------------------------------
 

@@ -22,11 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .windowed import (
-    STATE_PARTITIONS,
-    scoped_shuffle_partitions,
-    unload_state_store_providers,
-)
+from .epoch import run_available_now
 
 SENTINEL_US = 1_893_456_000_000_000  # 2030-01-01, past every fixture event
 
@@ -68,17 +64,7 @@ def streaming_session_windows(
         )
         .select("user_id", "n_events", "start_us", "end_us")
     )
-    with scoped_shuffle_partitions(spark, STATE_PARTITIONS):
-        q = (
-            agged.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    unload_state_store_providers(spark)
+    run_available_now(spark, agged, ckpt, path=out_dir)
     return (
         spark.read.schema("user_id long, n_events long, start_us long, end_us long")
         .parquet(out_dir)

@@ -33,11 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .enrich import STREAM_SCHEMA
-from .windowed import (
-    STATE_PARTITIONS,
-    scoped_shuffle_partitions,
-    unload_state_store_providers,
-)
+from .epoch import run_available_now
 
 JOIN_WINDOW_MINUTES = 60
 
@@ -83,19 +79,12 @@ def stream_interval_join(
     )
     out_schema = joined.schema
 
-    def emit(batch_df, epoch_id):
-        batch_df.write.mode("append").parquet(emit_dir)
-
-    with scoped_shuffle_partitions(spark, STATE_PARTITIONS):
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(emit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    unload_state_store_providers(spark)
+    run_available_now(
+        spark,
+        joined,
+        ckpt,
+        lambda batch_df, _: batch_df.write.mode("append").parquet(emit_dir),
+    )
     try:
         return spark.read.schema(out_schema).parquet(emit_dir)
     except Exception:  # no matches emitted

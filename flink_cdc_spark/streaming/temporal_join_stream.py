@@ -56,7 +56,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .retract_agg import stage_replay_batches, staged_schema
+from .epoch import EpochStateMachine, stage_replay_batches
 from ..operators.temporal_join import temporal_join
 from ..sources.envelope import (
     ENVELOPE_OP,
@@ -68,10 +68,23 @@ from ..sources.envelope import (
 N_TEMPORAL_BATCHES = 3
 
 
-class StreamingTemporalJoin:
+class StreamingTemporalJoin(EpochStateMachine):
     """Maintains the SCD2 history of `dim_table_id` from its changelog
     and temporal-joins `probe_table_id` rows (INSERT-only probes) against
-    it, epoch by epoch."""
+    it, epoch by epoch.
+
+    The carry is the resolved history (r16 optimization round): the fold
+    already computes the exact post-commit history as
+    predecessor-minus-delta-pks plus delta, so re-resolving it from disk —
+    a multi-commit merge-on-read scan + pk-window Exchange, TWICE per
+    epoch (fold touched-read + enrichment probe-read) — was pure waste. A
+    fold whose post-commit image could not be adopted (no probes to fill
+    its cache, or bucketed mode) invalidates it so the next epoch
+    re-attaches from the store. Unused in bucketed mode (num_buckets > 0),
+    whose key-restricted disk reads are the at-scale shape this carry
+    would otherwise mask."""
+
+    _TABLE = "hist"
 
     def __init__(
         self,
@@ -104,7 +117,7 @@ class StreamingTemporalJoin:
         sizes it is not, which is when callers flip this on
         (retract_agg, with ONE key-restricted read per epoch, keeps
         bucketing on by default and audits the pruned plan)."""
-        self.spark = spark
+        super().__init__(spark, work_dir, staged_dir, compact_every)
         self.dim_table_id = dim_table_id
         self.probe_table_id = probe_table_id
         self.dim_key = dim_key
@@ -114,36 +127,9 @@ class StreamingTemporalJoin:
         self.probe_cols = list(probe_cols)
         self.ts_expr = ts_expr
         self.n_batches = n_batches
-        self.active = staged_dir or os.path.join(work_dir, "active")
-        self.ckpt = os.path.join(work_dir, "ckpt")
-        self.state_dir = os.path.join(work_dir, "state")
-        self.out_dir = os.path.join(work_dir, "out")
-        os.makedirs(self.active, exist_ok=True)
-        os.makedirs(self.state_dir, exist_ok=True)
-        os.makedirs(self.out_dir, exist_ok=True)
-        from ..sinks.lsm_store import LsmStateStore
-
-        self.state = LsmStateStore(
-            spark, self.state_dir, compact_every=compact_every
-        )
         self.num_buckets = num_buckets
-        self._schema = None
-        # resolved history carried across epochs WITHIN a run (r16
-        # optimization round, guide §2.4/§5: the fold already computes
-        # the exact post-commit history as predecessor-minus-delta-pks
-        # plus delta, so re-resolving it from disk — a multi-commit
-        # merge-on-read scan + pk-window Exchange, TWICE per epoch (fold
-        # touched-read + enrichment probe-read) — was pure waste; the
-        # retract_topn/incremental_join r16 lesson applied here).
-        # Replay-safe: the carry is only trusted for epochs STRICTLY
-        # AFTER the one that produced it, and a fold whose post-commit
-        # image could not be adopted (no probes to fill its cache, or
-        # bucketed mode) invalidates it so the next epoch re-attaches
-        # from the store. Unused in bucketed mode (num_buckets > 0),
-        # whose key-restricted disk reads are the at-scale shape this
-        # carry would otherwise mask.
-        self._hist_carry = None
-        self._carry_epoch = None
+        self.out_dir = os.path.join(work_dir, "out")
+        os.makedirs(self.out_dir, exist_ok=True)
 
     # -- staging -------------------------------------------------------------
 
@@ -153,30 +139,7 @@ class StreamingTemporalJoin:
         self._schema = env_with_b.drop("__b").schema
         stage_replay_batches(env_with_b, self.active, n_batches=self.n_batches)
 
-    def staged(self) -> bool:
-        return os.path.exists(os.path.join(self.active, "_STAGED"))
-
     # -- LSM-backed history state (O(batch) delta commits) ---------------------
-
-    _HIST = "hist"
-    # lineage-truncation cadence for the carried history (the
-    # retract_topn/incremental_join convention): in-between epochs carry
-    # the cached frame directly — zero extra jobs — and every
-    # _CKPT_EVERY-th epoch re-anchors it in a localCheckpoint so plans
-    # don't grow without bound on long runs. No-recompute assumption
-    # (ADVICE r16): between anchors the carry is only a filled
-    # MEMORY_AND_DISK cache whose lineage references store delta files a
-    # later compact()/drop_epoch_deltas() may rewrite — fine in local
-    # mode (blocks never recompute), but an executor/block loss on a
-    # real cluster would recompute against a mutated store; deployments
-    # with eviction should set _CKPT_EVERY = 1.
-    _CKPT_EVERY = 4
-
-    def _drop_carry(self) -> None:
-        if self._hist_carry is not None:
-            self._hist_carry.unpersist()
-        self._hist_carry = None
-        self._carry_epoch = None
 
     def _commit_hist(self, delta: DataFrame) -> None:
         """Append ONE upsert delta commit keyed (dim_key, valid_from_ver):
@@ -200,8 +163,8 @@ class StreamingTemporalJoin:
         # key's pre-batch base, new rows carry ordinals strictly above it
         # — no (key, valid_from_ver) repeats within one fold's delta
         self.state.merge(
-            self._HIST,
-            wrap_as_inserts(delta, self._HIST),
+            self._TABLE,
+            wrap_as_inserts(delta, self._TABLE),
             delta.schema,
             [self.dim_key, "valid_from_ver"],
             batch_unique=True,
@@ -243,10 +206,10 @@ class StreamingTemporalJoin:
         # an empty pruned frame, which the closes/base joins below
         # handle as no-prior-versions)
         fresh_read = None
-        if self._hist_carry is not None:
-            hist_old = self._hist_carry
+        if self._carry is not None:
+            hist_old = self._carry
         else:
-            hist_old = self.state.read(self._HIST, touched=keys)
+            hist_old = self.state.read(self._TABLE, touched=keys)
             if hist_old is not None:
                 # referenced twice per epoch (fold semi-join + the
                 # post-commit carry's anti-join): without the cache the
@@ -316,17 +279,7 @@ class StreamingTemporalJoin:
         # return value
         self._last_fold = (delta, hist_old, fresh_read)
 
-    def _merge_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        # replay-overwrite: announce the epoch and unreference any delta
-        # a crashed attempt of this epoch left behind, so the fold reads
-        # the state exactly as of the committed predecessor
-        self.state.begin_epoch(epoch_id)
-        self.state.drop_epoch_deltas(self._HIST, epoch_id)
-        if self._carry_epoch is not None and self._carry_epoch >= epoch_id:
-            # replayed/retried epoch in-process: the carry reflects a
-            # commit this epoch is about to overwrite — fall back to the
-            # store (drop_epoch_deltas above restored the predecessor)
-            self._drop_carry()
+    def _fold(self, batch_df: DataFrame, epoch_id: int) -> None:
         # ONE metadata job decides which planes the batch carries (a
         # limit(1).count() per plane costs an extra Spark job per epoch —
         # measured against the bench's per-epoch fixed-overhead budget)
@@ -377,14 +330,14 @@ class StreamingTemporalJoin:
                         "left_anti",
                     ).unionByName(delta).cache()
                 hist = hist_new
-            elif not folded and self._hist_carry is not None:
-                hist = self._hist_carry
+            elif not folded and self._carry is not None:
+                hist = self._carry
             else:
                 # bucketed mode (or a probe-only epoch with no carry):
                 # the store serves the read, pruned to the probed keys'
                 # buckets at file listing before the semi-join below
                 # bounds it to the keys themselves
-                hist = self.state.read(self._HIST, touched=probe_keys)
+                hist = self.state.read(self._TABLE, touched=probe_keys)
             if hist is None:
                 # probes before any dimension version: NULL-enriched,
                 # typed from the harmonized envelope payload
@@ -417,21 +370,10 @@ class StreamingTemporalJoin:
             )
             enriched.write.mode("overwrite").parquet(out_path)
             if hist_new is not None:
-                # the write above materialized hist_new's cache — adopt
-                # it as the next epoch's carry, re-anchored in a
-                # localCheckpoint every _CKPT_EVERY epochs to bound plan
-                # growth
-                prev = self._hist_carry
-                if epoch_id % self._CKPT_EVERY == self._CKPT_EVERY - 1:
-                    self._hist_carry = hist_new.localCheckpoint(eager=True)
-                    hist_new.unpersist()
-                else:
-                    self._hist_carry = hist_new
-                hist_new = None  # adopted — must not unpersist in finally
-                self._carry_epoch = epoch_id
+                # the write above materialized hist_new's cache
+                self._adopt_carry(hist_new, epoch_id)
+                hist_new = None
                 adopted = True
-                if prev is not None:
-                    prev.unpersist()
         finally:
             if not folded and self._last_fold is not None:
                 # the fold committed but raised before handing its frames
@@ -439,7 +381,7 @@ class StreamingTemporalJoin:
                 # so the caches don't leak, and treat it as an unadopted
                 # fold (the store moved past the carry)
                 delta, hist_old, fresh_read = self._last_fold
-                if hist_old is self._hist_carry:
+                if hist_old is self._carry:
                     hist_old = None  # owned by the carry, released below
                 folded = True
             if folded and not adopted:
@@ -460,49 +402,10 @@ class StreamingTemporalJoin:
                 # the session lifetime (the ADVICE r15 leak class)
                 fresh_read.unpersist()
 
-    # -- the streaming query -----------------------------------------------------
-
-    def run(self) -> None:
-        if self._schema is None:
-            self._schema = staged_schema(self.spark, self.active)
-        from .windowed import (
-            STATE_PARTITIONS,
-            scoped_shuffle_partitions,
-            unload_state_store_providers,
-        )
-
-        stream = (
-            self.spark.readStream.schema(self._schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.active)
-        )
-        try:
-            with scoped_shuffle_partitions(self.spark, STATE_PARTITIONS):
-                q = (
-                    stream.writeStream.outputMode("update")
-                    .foreachBatch(lambda df, eid: self._merge_epoch(df, eid))
-                    .option("checkpointLocation", self.ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
-            # checkpoint committed: clear the persisted in-flight marker.
-            # Deliberately NOT in the finally: a failed run's last epoch
-            # can still replay, and sealing would let a maintenance
-            # compact() bake its delta into the base.
-            self.state.seal(self._HIST)
-        finally:
-            # released even when the streaming query fails (ADVICE r16 —
-            # the crash-injection subclasses exercise that path): the
-            # carried history's cached blocks and the state-store
-            # providers must not outlive the run
-            self._drop_carry()
-            unload_state_store_providers(self.spark)
-
     # -- results -------------------------------------------------------------
 
     def current_history(self) -> DataFrame:
-        hist = self.state.read(self._HIST)
+        hist = self.state.read(self._TABLE)
         if hist is None:
             raise RuntimeError("no committed history state")
         return hist

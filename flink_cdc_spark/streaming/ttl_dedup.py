@@ -43,11 +43,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .windowed import (
-    STATE_PARTITIONS,
-    scoped_shuffle_partitions,
-    unload_state_store_providers,
-)
+from .epoch import run_available_now
 
 STRIPE_DAYS = 7
 N_TTL_BATCHES = 4
@@ -131,16 +127,7 @@ def streaming_ttl_dedup(
         if on_epoch is not None:
             on_epoch(epoch_id, "post")
 
-    with scoped_shuffle_partitions(spark, STATE_PARTITIONS):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(emit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    unload_state_store_providers(spark)
+    run_available_now(spark, stream, ckpt, emit)
     return spark.read.schema(
         "user_id LONG, event_type STRING, arrival_us LONG"
     ).parquet(os.path.join(emit_dir, "e*"))

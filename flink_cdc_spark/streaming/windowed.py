@@ -26,29 +26,13 @@ cannot change the result (float discipline).
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .epoch import run_available_now
+
 N_BATCHES = 3
-STATE_PARTITIONS = 4
-
-
-@contextlib.contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily lower spark.sql.shuffle.partitions around a streaming
-    query: the HDFS-backed state store creates one store per shuffle
-    partition, so a 32-partition default means 32 snapshot reloads per
-    restart and 32 delta files per version for a handful of windows —
-    pure fixed overhead (the r7 bench creep). State volume here is tiny;
-    at real scale the caller sizes this to the keyspace instead."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def rotate_emit_dir(root: str) -> str:
@@ -72,28 +56,6 @@ def rotate_emit_dir(root: str) -> str:
     new = os.path.join(root, f"run_{stamp:020d}")
     os.makedirs(new)
     return new
-
-
-def unload_state_store_providers(spark: SparkSession) -> None:
-    """Unload the state-store providers still held for FINISHED queries.
-
-    Spark keeps each terminated streaming query's state-store providers
-    loaded in the executor JVM, and the shared maintenance thread keeps
-    snapshotting them — a session that drains many short availableNow
-    queries accumulates stale providers that pin executor memory and add
-    20-40% wall time to every LATER stateful query (measured here: a
-    4-query sequence left the next interval join at 6.1s vs 4.2s after
-    unloading). ``StateStore.stop()`` drops all providers and the
-    maintenance pool; the next stateful query lazily restarts both, and
-    restores its own state from the checkpoint as on any restart. Call
-    only between queries — unloading under an ACTIVE query is correct
-    (providers reload from the checkpoint) but slow.
-    """
-    try:
-        jvm = spark._jvm  # py4j absent under Spark Connect — best-effort
-        jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass
 
 
 DAYS_PER_BATCH = 10
@@ -156,19 +118,6 @@ def windowed_watermark_aggregate(
     ckpt = os.path.join(work_dir, "ckpt")
     emit_dir = os.path.join(work_dir, "emitted")
     os.makedirs(active, exist_ok=True)
-    schema = None
-    with scoped_shuffle_partitions(spark, STATE_PARTITIONS):
-        schema = _run_replay(spark, staged_dir, active, ckpt, emit_dir)
-    try:
-        return spark.read.schema(schema).parquet(emit_dir)
-    except Exception:  # no window finalized -> no files written
-        return spark.createDataFrame([], schema)
-
-
-def _run_replay(spark, staged_dir, active, ckpt, emit_dir):
-    import shutil
-
-    schema = None
     for b in range(N_BATCHES):
         src = os.path.join(staged_dir, f"b{b}")
         for fn in os.listdir(src):
@@ -191,24 +140,19 @@ def _run_replay(spark, staged_dir, active, ckpt, emit_dir):
                 F.col("total_dec").cast("double").alias("total"),
             )
         )
-        schema = agged.schema
-
         # emission stays distributed: each epoch's finalized windows are
         # written executor-side as parquet — nothing funnels through the
         # driver (at scale the emission is itself big)
-        def write_emission(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(emit_dir)
-
-        q = (
-            agged.writeStream.outputMode("append")
-            .foreachBatch(write_emission)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            spark,
+            agged,
+            ckpt,
+            lambda batch_df, _: batch_df.write.mode("append").parquet(emit_dir),
         )
-        q.awaitTermination(300)
-    unload_state_store_providers(spark)
-    return schema
+    try:
+        return spark.read.schema(agged.schema).parquet(emit_dir)
+    except Exception:  # no window finalized -> no files written
+        return spark.createDataFrame([], agged.schema)
 
 
 def windowed_watermark_oracle_sql(table: str = "events") -> str:

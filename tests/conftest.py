@@ -90,7 +90,7 @@ _SLOW_TIER = [
 ]
 
 
-def _slow_tier_regexes():
+def _slow_tier_regexes(patterns=_SLOW_TIER):
     # NOT fnmatch: the patterns contain literal "[param]" brackets, which
     # fnmatch would parse as character classes.  `*` is the only wildcard.
     import re
@@ -102,8 +102,16 @@ def _slow_tier_regexes():
                 for part in re.split(r"(\*)", pat)
             ) + "$"
         )
-        for pat in _SLOW_TIER
+        for pat in patterns
     ]
+
+
+def _tier_id(nodeid: str) -> str:
+    """The "file.py::test[param]" form the _SLOW_TIER patterns match: the
+    file's basename comes from the part before the first "::", because a
+    parametrized id may itself contain "/"."""
+    path, sep, rest = nodeid.partition("::")
+    return os.path.basename(path) + sep + rest
 
 
 def pytest_collection_modifyitems(config, items):
@@ -114,7 +122,7 @@ def pytest_collection_modifyitems(config, items):
     )
     regexes = _slow_tier_regexes()
     for item in items:
-        nodeid = item.nodeid.split("/")[-1]  # "file.py::test[param]"
+        nodeid = _tier_id(item.nodeid)
         if "slow" in item.keywords or any(r.match(nodeid) for r in regexes):
             item.add_marker(skip_slow)
 

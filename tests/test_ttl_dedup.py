@@ -88,7 +88,7 @@ def test_state_is_bounded_by_eviction(spark, tmp_path):
     _write_batch(spark, staged, 1, [100, 101, 102, 103, 104])
     _write_batch(spark, staged, 2, [200, 201, 202, 203, 204])
     _write_batch(spark, staged, 3, [300, 301, 302, 303, 304])
-    from flink_cdc_spark.streaming.windowed import (
+    from flink_cdc_spark.streaming.epoch import (
         STATE_PARTITIONS,
         scoped_shuffle_partitions,
         unload_state_store_providers,
